@@ -26,9 +26,15 @@ Scale notes (SURVEY §4, §7 hard parts):
   its lowest-degree corner. This bounds per-node candidate fan-out by
   O(m^0.5) instead of O(max_degree) — the standard literature
   optimization the reference lacks — and is what survives heavy-tailed
-  degree distributions at 100 TB. Since r18 the closure is a per-edge
+  degree distributions at 100 TB. The closure is a per-edge
   adjacency-array intersection (no open-triad rows are ever
   materialized; see :func:`_edge_common_closers`).
+- Each triangle call materializes exactly two tables, the canonical
+  edge set and the out-adjacency, both as eager ``localCheckpoint``s:
+  GC-scoped blocks freed with the result, never SQL CacheManager
+  entries. Those blocks are executor-local and unreplicated, so losing
+  an executor (or a dynamic-allocation decommission) fails the job
+  instead of recomputing them from lineage.
 - Edge dedup happens BEFORE the candidate stage (the reference
   dedups only at the very end, after a quadratic candidate explosion:
   4,055,477 raw emissions for 587,314 distinct on 100k.txt).
@@ -87,11 +93,10 @@ def canonical_edges(edges: DataFrame,
 
 def edge_multiplicity(edges: DataFrame) -> DataFrame:
     """Unordered-pair multiplicities, self-loops included:
-    ``(u, v, mult)`` with ``u <= v``. Until r18 this fed the faithful
-    triangle path's literal multiset-adjacency replay; the shipped
-    path now uses the decomposition documented in :func:`triangles`,
-    and the replay survives as the test-side reference proving the
-    decomposition lossless
+    ``(u, v, mult)`` with ``u <= v``. The faithful triangle path does
+    not use it (see the decomposition in :func:`triangles`); it feeds
+    the literal multiset-adjacency replay that tests use as the
+    reference proving that decomposition lossless
     (test_faithful_decomposition_matches_multadj_replay)."""
     return (
         edges.select(F.least("src", "dst").alias("u"),
@@ -131,9 +136,9 @@ def adjacency(edges: DataFrame, as_string: bool = False) -> DataFrame:
 
 def degrees_from_canonical(ce: DataFrame) -> DataFrame:
     # In-row explode, not union-of-projections: one scan of ce (which
-    # is NOT always cached — the registered degrees/candidate_pairs
+    # is NOT always materialized — the registered degrees/candidate_pairs
     # queries reach here with the full derive+dedup pipeline upstream,
-    # and the union form ran it twice; r18 optimization round).
+    # and the union form ran it twice).
     return (
         ce.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
         .groupBy("node")
@@ -170,106 +175,58 @@ def candidate_pair_counts(edges: DataFrame) -> DataFrame:
 
 
 # --- §2 rows 6-9: triangle enumeration --------------------------------------
-def _edge_common_closers(edges: DataFrame,
-                         assume_canonical: bool = False,
-                         _input_materialized: bool = False) -> DataFrame:
+def _edge_common_closers(ce: DataFrame) -> DataFrame:
     """Each oriented edge with the ARRAY of out-neighbors common to its
     two endpoints: (w, x, common) where w→x is a degree-oriented edge
     and ``common`` = N+(w) ∩ N+(x). In the orientation DAG every
     triangle has a unique source corner w (out-degree 2 within the
     triangle: w→x, w→y, plus the closing x→y), so each triangle
     appears exactly once — as y ∈ common on its (w, x) edge. Shared by
-    the enumeration (explodes ``common``), the count (sums sizes — no
-    explode), and faithful mode via the simple path.
+    the enumeration (explodes ``common``) and the count (sums sizes —
+    no explode).
 
-    NOTE: oriented edges whose head ``x`` has no out-neighbors in the
-    orientation are OMITTED (the inner join on x drops them) — their
-    intersection is necessarily empty, so both current consumers are
-    unaffected, but a consumer expecting one row per oriented edge
-    must outer-join (r18 ADVICE).
+    ``ce`` is the canonical edge set, already checkpointed by the
+    caller: it feeds the degrees AND the orientation (and, in faithful
+    mode, both self-loop classes), so the upstream scan and dedup — or,
+    over derived edges, a whole join pipeline — run once. Nothing
+    downstream reuses its (u, v) hash partitioning, so the checkpoint's
+    loss of it is free.
 
-    r18 optimization round (guide §1.2 "the distributed algorithm"):
-    this replaces the 2-path self-join + LEFT SEMI closure, which
-    materialized every open triad as a join row — P = Σ C(d+(w), 2)
-    rows (41.1M at sf0.1) probed one-by-one against the closing-edge
-    hash table, and at scale SORTED for the closure's sort-merge join
-    (the 10× probe's only spill: 13 GB of triad sort buffers). The
-    intersection does the same element-level work inside two
-    edge-count-sized joins — no triad rows exist, no O(P) sort, and
-    the only payload crossing an exchange is the adjacency arrays
-    (Σ|N+| = m elements) plus per-edge array copies. Measured (noop
-    sink, scripts/attr_triangle.py): count at sf0.1 79.4 → 65.1 s CPU,
-    enumeration 123.2 → 59.2 s CPU; at the 10× scale point 1,772 →
-    499 s CPU and 98.1 → 26.4 s wall with the spill gone. Orientation
-    bounds every array by O(√m) (max 97 at sf0.1), so per-row memory
-    is small and a hot ``x`` join key carries small arrays."""
-    # The canonical edge set feeds degrees AND orientation — cut and
-    # materialize it once so the upstream scan/dedup (or, in the
-    # derived-edges case, a whole join pipeline) runs once. At
-    # cluster scale this is the deduped simple graph: far smaller
-    # than the raw input and the right thing to keep hot.
-    #
-    # r19 cache-lifecycle fix (r18 VERDICT "What's wrong" #2 / ADVICE):
-    # eager localCheckpoint instead of persist()+count() — the same
-    # materialization job and the same blocks, but GC-scoped (the
-    # ContextCleaner frees them when the returned plan is dropped)
-    # rather than a plan-keyed CacheManager entry that outlived every
-    # invocation. Nothing downstream reuses ce's (u,v)-hash
-    # partitioning, so the checkpoint's partitioning loss is free.
-    # ``_input_materialized=True`` (faithful mode) skips even that:
-    # the caller already checkpointed the edge set and this call's
-    # canonical_edges is a pure column rename of it (the r18 ADVICE's
-    # "second persisted copy").
-    ce = canonical_edges(edges, assume_canonical)
-    if not _input_materialized:
-        ce = ce.localCheckpoint(eager=True)
-    # Re-shuffle the (small) oriented edge set on its low endpoint.
-    # Without this, AQE coalesces the tiny upstream aggregates into a
-    # handful of partitions and the compute-bound intersection stage
-    # inherits that near-serial layout (same class as the pre-r18
-    # triad join's measured 1.3–1.8× regression under AQE coalescing,
-    # BENCHNOTES.md round-5). Orientation bounds per-key fan-out by
-    # O(sqrt(m)), so hashing on lo cannot itself create a hot
-    # partition.
-    #
-    # The partition COUNT must be explicit: AQE's coalescing targets
-    # bytes (the 64 MB advisory size), but this exchange feeds work
-    # proportional to Σ(|N+(w)|+|N+(x)|) per edge — far more compute
-    # per shuffled byte than byte-based coalescing assumes. 2× the
-    # cluster's core count keeps every core busy through stragglers
-    # and scales with the cluster instead of hard-coding this box;
-    # the floor of 64 preserves the measured local[32] operating
-    # point even under smaller test sessions.
+    Oriented edges whose head ``x`` has no out-neighbors are OMITTED
+    (the inner join on x drops them): their intersection is
+    necessarily empty, so both consumers are unaffected, but a consumer
+    expecting one row per oriented edge must outer-join.
+
+    No open-triad row (P = Σ C(d+(w), 2) of them) is ever
+    materialized: the element-level work happens inside one
+    edge-count-sized join, and the only payload crossing an exchange
+    is the adjacency arrays (Σ|N+| = m elements). Orientation bounds
+    every array by O(√m), so per-row memory is small and a hot ``x``
+    join key carries small arrays.
+
+    The out-adjacency is the one table materialized here: it feeds the
+    exploded edge side AND the differently-aliased probe side, whose
+    subplans do not unify — unmaterialized, the degrees, orientation,
+    repartition and collect_list would each run twice. The oriented
+    edges are re-derived from it by a narrow explode, so the
+    intersection reads no other table and its edge side keeps the
+    checkpoint's ``nparts`` physical layout.
+
+    ``nparts`` is explicit because AQE's coalescing targets bytes (the
+    64 MB advisory size), while this exchange feeds work proportional
+    to Σ(|N+(w)|+|N+(x)|) per edge — far more compute per shuffled
+    byte than byte-based coalescing assumes; left to AQE, the tiny
+    upstream aggregates collapse into a handful of near-serial
+    partitions. 2× the cluster's core count keeps every core busy
+    through stragglers and scales with the cluster; the floor of 64
+    keeps the same operating point under small test sessions. Hashing
+    on ``lo`` cannot itself create a hot partition: orientation bounds
+    per-key fan-out by O(√m)."""
     nparts = max(64, 2 * ce.sparkSession.sparkContext.defaultParallelism)
-    # The oriented edge set feeds e1's stream side AND both adj
-    # broadcasts, and the adjacency table feeds two
-    # DIFFERENTLY-ALIASED broadcasts whose subplans do not unify —
-    # unmaterialized, the executed plan ran the degrees+orientation+
-    # repartition pipeline THREE times and the collect_list twice
-    # (read in the r18 executed plan; the same double-build the
-    # streaming closure measured at 109 → 68 s CPU).
-    #
-    # r19 lifecycle: o is persisted only long enough to derive adj on
-    # its exchange-free partitioning (the groupBy below reuses the
-    # repartition's hash(lo) layout — cached-plan partitioning IS
-    # visible statically, unlike a checkpoint's), then both survive
-    # to the returned plan as eager localCheckpoints: GC-scoped RDD
-    # blocks (ContextCleaner-freed with the result) instead of the
-    # pre-r19 THREE CacheManager entries per invocation that nothing
-    # ever unpersisted (r18 VERDICT What's-wrong #2). The extra cost
-    # is one in-memory copy of o's blocks (no shuffle — fingerprint
-    # pins unchanged); the checkpoint RDDs keep the 2×cores physical
-    # partition layout for the intersection stage.
-    o_p = _oriented_repartitioned(ce, nparts).persist()
-    # Out-adjacency arrays, grouped on the SAME key/partitioning as the
-    # repartition above — no extra exchange; the arrays total m
-    # elements and each is O(√m) by orientation.
-    adj = _out_adjacency(o_p).localCheckpoint(eager=True)
-    o = o_p.localCheckpoint(eager=True)  # copy from the cache, no shuffle
-    o_p.unpersist()
-    e1 = o.join(adj, "lo").select(
-        F.col("lo").alias("w"), F.col("hi").alias("x"),
-        F.col("nbrs").alias("n_lo"))
+    adj = _out_adjacency(_oriented_repartitioned(ce, nparts)) \
+        .localCheckpoint(eager=True)
+    e1 = adj.select(F.col("lo").alias("w"), F.explode("nbrs").alias("x"),
+                    F.col("nbrs").alias("n_lo"))
     e2 = e1.join(adj.select(F.col("lo").alias("x"),
                             F.col("nbrs").alias("n_hi")), "x")
     return e2.select(
@@ -278,32 +235,17 @@ def _edge_common_closers(edges: DataFrame,
 
 def _oriented_repartitioned(ce: DataFrame, nparts: int) -> DataFrame:
     """The oriented edge set, explicitly REPARTITION_BY_NUM on its low
-    endpoint — the pre-checkpoint subplan of the closure's stream
-    side. Factored so the plan pins (test_plans) can explain the
-    ACTUAL code path: since the r19 checkpoint lifecycle the final
-    query plan truncates at the checkpoint scan, so the r6
-    explicit-partition-count contract is pinned on this subplan."""
+    endpoint — the pre-checkpoint subplan of the closure. Factored so
+    the plan pins (test_plans) can explain the code path itself: the
+    final query plan truncates at the checkpoint scan."""
     return _oriented(ce).repartition(nparts, F.col("lo"))
 
 
 def _out_adjacency(o: DataFrame) -> DataFrame:
     """Out-neighbor arrays per oriented low endpoint (bounded O(√m)
-    by the degree orientation) — the closure's build side, factored
-    for the same plan-pin reason as :func:`_oriented_repartitioned`."""
+    by the degree orientation), grouped on the same key as
+    :func:`_oriented_repartitioned` — no extra exchange."""
     return o.groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
-
-
-def _simple_triangle_corners(edges: DataFrame,
-                             assume_canonical: bool = False,
-                             _input_materialized: bool = False) -> DataFrame:
-    """Each triangle exactly once as (w, x, y): w the triangle's
-    low-(degree,id) source corner, x its oriented out-neighbor on this
-    edge, y the closing common out-neighbor — NOT yet sorted into
-    canonical (a,b,c) order (x < y is NOT guaranteed, unlike the
-    pre-r18 triad form; both consumers sort or count). Shared by the
-    enumeration (which canonicalizes) and faithful mode."""
-    ec = _edge_common_closers(edges, assume_canonical, _input_materialized)
-    return ec.select("w", "x", F.explode("common").alias("y"))
 
 
 def _oriented(ce: DataFrame) -> DataFrame:
@@ -333,8 +275,7 @@ def _oriented(ce: DataFrame) -> DataFrame:
 
 
 def triangles(edges: DataFrame, mode: str = "simple",
-              assume_canonical: bool = False,
-              _input_materialized: bool = False) -> DataFrame:
+              assume_canonical: bool = False) -> DataFrame:
     """Enumerate triangles as canonical ``(a, b, c)``, ``a <= b <= c``.
 
     ``simple``: per-edge adjacency intersection on the degree-oriented
@@ -349,86 +290,74 @@ def triangles(edges: DataFrame, mode: str = "simple",
     {x,y} is an input edge and w's multiset adjacency contains x and y
     at distinct positions — via the exact class decomposition below.
     On self-loop-free input the two modes agree (verified against the
-    survey's golden counts).
+    survey's golden counts). It ignores ``assume_canonical``: the
+    self-loops it needs are exactly what a canonical input has lost.
     """
+    if mode not in ("simple", "faithful"):
+        raise ValueError(
+            f"unknown mode: {mode!r} (use 'simple' or 'faithful')")
+    ce = canonical_edges(edges, assume_canonical and mode == "simple") \
+        .localCheckpoint(eager=True)
+    wxy = _edge_common_closers(ce).select(
+        "w", "x", F.explode("common").alias("y"))
+    # x < y is NOT guaranteed per row, so every triple is sorted here.
+    abc = F.array_sort(F.array("w", "x", "y"))
+    simple_tris = wxy.select(
+        abc.getItem(0).alias("a"),
+        abc.getItem(1).alias("b"),
+        abc.getItem(2).alias("c"),
+    )
     if mode == "simple":
-        tri = _simple_triangle_corners(edges, assume_canonical,
-                                       _input_materialized)
-        abc = F.array_sort(F.array("w", "x", "y"))
-        return tri.select(
-            abc.getItem(0).alias("a"),
-            abc.getItem(1).alias("b"),
-            abc.getItem(2).alias("c"),
-        )
-    if mode == "faithful":
-        # Degenerate-output DECOMPOSITION (r18 optimization round).
-        # The pre-r18 form replayed the reference's multiset-adjacency
-        # condition literally: pair ⋈ madj ⋈ madj over the UNORIENTED
-        # adjacency — O(Σ d(x)·mult) candidate rows, measured 332 s
-        # executor CPU at sf0.1 where the oriented simple path costs
-        # 73 s for the same clean input. But the condition factors
-        # EXACTLY into three disjoint classes by the output triple's
-        # node-multiset pattern (distinct triples; S = the simple
-        # support graph, L = self-loop nodes):
-        #
-        # - 3 distinct nodes (x<y, w∉{x,y}): {x,y},{w,x},{w,y} ∈ S —
-        #   precisely the simple-mode triangles of the support graph,
-        #   so the degree-oriented plan applies.
-        # - exactly two equal (sorted (ℓ,ℓ,z)): requires madj(ℓ,ℓ)≥1
-        #   ⇒ ℓ ∈ L, plus the edge {ℓ,z} ∈ S. (The x==y branch with
-        #   w≠x needs madj(w,x) ≥ 2 — a multi-edge — but a multi-edge
-        #   is in S and that branch's x is in L, so it is a SUBSET of
-        #   this class: multiplicities beyond existence never add
-        #   triples.)
-        # - all equal ((ℓ,ℓ,ℓ)): madj(ℓ,ℓ) = 2·mult ≥ 2 ⇔ ℓ ∈ L.
-        #
-        # The classes cannot overlap (different node-multiset
-        # patterns) and each is produced exactly once below, so the
-        # union IS the distinct set — no final distinct() needed.
-        # Equivalence to the literal multadj replay is pinned by
-        # test_faithful_decomposition_matches_multadj_replay on random
-        # dirty graphs (self-loops + duplicates) and by the reference
-        # goldens (30k.txt carries a real self-loop). On clean input
-        # L = ∅ and this costs exactly the simple path.
-        # Eager localCheckpoint, not persist (r19 cache-lifecycle fix):
-        # consumed by the corners path and 2 joins; GC-scoped, so no
-        # CacheManager entry outlives the returned plan. The simple
-        # path below is told the input is already materialized so it
-        # does not checkpoint a second copy of the same edge set (the
-        # r18 ADVICE item).
-        ce = canonical_edges(edges).localCheckpoint(eager=True)
-        loops = (edges.where(F.col("src") == F.col("dst"))
-                 .select(F.col("src").alias("l")).distinct())
-        simple_tris = triangles(
-            ce.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-            mode="simple", assume_canonical=True,
-            _input_materialized=True)
-        # u < v in ce, so each class-B triple is emitted pre-sorted.
-        bl = ce.join(loops, F.col("u") == F.col("l")).select(
-            F.col("u").alias("a"), F.col("u").alias("b"),
-            F.col("v").alias("c"))
-        br = ce.join(loops, F.col("v") == F.col("l")).select(
-            F.col("u").alias("a"), F.col("v").alias("b"),
-            F.col("v").alias("c"))
-        dd = loops.select(F.col("l").alias("a"), F.col("l").alias("b"),
-                          F.col("l").alias("c"))
-        return simple_tris.unionByName(bl).unionByName(br).unionByName(dd)
-    raise ValueError(f"unknown mode: {mode!r} (use 'simple' or 'faithful')")
+        return simple_tris
+    # The reference's condition factors EXACTLY into three disjoint
+    # classes by the output triple's node-multiset pattern (distinct
+    # triples; S = the simple support graph, L = self-loop nodes):
+    #
+    # - 3 distinct nodes (x<y, w∉{x,y}): {x,y},{w,x},{w,y} ∈ S —
+    #   precisely the simple-mode triangles of the support graph,
+    #   so the degree-oriented plan applies.
+    # - exactly two equal (sorted (ℓ,ℓ,z)): requires madj(ℓ,ℓ)≥1
+    #   ⇒ ℓ ∈ L, plus the edge {ℓ,z} ∈ S. (The x==y branch with
+    #   w≠x needs madj(w,x) ≥ 2 — a multi-edge — but a multi-edge
+    #   is in S and that branch's x is in L, so it is a SUBSET of
+    #   this class: multiplicities beyond existence never add
+    #   triples.)
+    # - all equal ((ℓ,ℓ,ℓ)): madj(ℓ,ℓ) = 2·mult ≥ 2 ⇔ ℓ ∈ L.
+    #
+    # The classes cannot overlap (different node-multiset patterns)
+    # and each is produced exactly once below, so the union IS the
+    # distinct set — no final distinct() needed. A literal replay of
+    # the multiset adjacency would cost O(Σ d(x)·mult) candidate rows.
+    # Equivalence to that replay is pinned by
+    # test_faithful_decomposition_matches_multadj_replay on random
+    # dirty graphs (self-loops + duplicates). On clean input L = ∅ and
+    # this costs exactly the simple path.
+    loops = (edges.where(F.col("src") == F.col("dst"))
+             .select(F.col("src").alias("l")).distinct())
+    # u < v in ce, so each class-B triple is emitted pre-sorted.
+    bl = ce.join(loops, F.col("u") == F.col("l")).select(
+        F.col("u").alias("a"), F.col("u").alias("b"), F.col("v").alias("c"))
+    br = ce.join(loops, F.col("v") == F.col("l")).select(
+        F.col("u").alias("a"), F.col("v").alias("b"), F.col("v").alias("c"))
+    dd = loops.select(F.col("l").alias("a"), F.col("l").alias("b"),
+                      F.col("l").alias("c"))
+    return simple_tris.unionByName(bl).unionByName(br).unionByName(dd)
 
 
 def triangle_count(edges: DataFrame, mode: str = "simple",
                    assume_canonical: bool = False) -> DataFrame:
     """Total triangle count (§2 derived operator; the published metric).
 
-    The simple-mode count never materializes per-triangle rows at all
-    (r18): each oriented edge contributes |N+(w) ∩ N+(x)| — summing
-    the intersection sizes counts every triangle exactly once without
-    the explode or the canonical (a,b,c) sort projection. coalesce(0)
-    matches the pre-r18 count-rows form on an edgeless input (sum over
-    zero rows is NULL, count was 0).
+    The simple-mode count never materializes per-triangle rows at all:
+    each oriented edge contributes |N+(w) ∩ N+(x)| — summing the
+    intersection sizes counts every triangle exactly once without the
+    explode or the canonical (a,b,c) sort projection. coalesce(0)
+    makes an edgeless input count 0 (a sum over zero rows is NULL).
     """
     if mode == "simple":
-        return _edge_common_closers(edges, assume_canonical).agg(
+        ce = canonical_edges(edges, assume_canonical) \
+            .localCheckpoint(eager=True)
+        return _edge_common_closers(ce).agg(
             F.coalesce(F.sum(F.size("common")), F.lit(0))
             .cast("long").alias("n_triangles"))
     return triangles(edges, mode=mode).agg(

@@ -70,6 +70,7 @@ for any degree.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +80,7 @@ from ..operators.graph import canonical_edges
 from .pipeline import _COUNTER
 
 _EDGE_SCHEMA = "src long, dst long"
+_RUN_OF_FILE = re.compile(r"/batch_key=(r\d+)b\d+/")
 
 
 def _is_missing_path(ex: AnalysisException) -> bool:
@@ -333,30 +335,29 @@ def streaming_triangles(spark: SparkSession, edges_dir: str,
         .start()
     )
     q.awaitTermination()
-    # .distinct() closes the one non-idempotent window left (ADVICE
-    # r13): a crash BETWEEN the triangles write and the state write,
-    # followed by a fresh-checkpoint rerun under a DIFFERENT run
-    # ordinal, leaves the half-committed r{run}b{N} triangles
-    # partition in place while the rerun re-derives the same triangles
-    # under its own key — duplicate rows across differently-keyed
-    # partitions that per-partition overwrite can't collapse. Rows are
-    # canonical (ta<=tb<=tc), so a set union over all partitions is
-    # exactly the intended semantics.
+    # .distinct() closes the one non-idempotent window left: a crash
+    # BETWEEN the triangles write and the state write, followed by a
+    # fresh-checkpoint rerun under a DIFFERENT run ordinal, leaves the
+    # half-committed r{run}b{N} partitions in place while the rerun
+    # re-derives the same triangles under its own key — duplicate rows
+    # across differently-keyed partitions that per-partition overwrite
+    # can't collapse. The orphaned triangles partition may even be
+    # EMPTY while its deg/adj deltas let the rerun complete a triangle
+    # twice under one key. Rows are canonical (ta<=tb<=tc), so a set
+    # union over all partitions is exactly the intended semantics.
     #
-    # r19 optimization round (guide §2.4 — "a distinct on data that is
-    # already unique"): that window REQUIRES partitions from two or
-    # more run ordinals to coexist under out_dir. Within one run the
-    # partitions are provably duplicate-free — each is internally
-    # distinct (the per-batch distinct) and cross-batch disjoint (a
-    # triangle is completed exactly once: its last edge enters state
-    # in exactly one batch, and the anti-join bars re-entry) — so the
-    # final distinct is a no-op there and is SKIPPED; it is applied
-    # exactly when >1 run key is present (the only case with possible
-    # duplicates; pinned by test_streaming_triangles_cross_run_half_
-    # commit_dedups, which creates that case). The run-key probe
-    # collects only the distinct Hive partition VALUES — bounded by
-    # the number of micro-batches, no data columns read. Measured:
-    # the distinct was 17 s executor CPU of the registered query's 88.
+    # That window REQUIRES partitions from two or more run ordinals to
+    # coexist. Within one run the partitions are provably
+    # duplicate-free — each is internally distinct (the per-batch
+    # distinct) and cross-batch disjoint (a triangle is completed
+    # exactly once: its last edge enters state in exactly one batch,
+    # and the anti-join bars re-entry) — so the distinct is applied
+    # only when more than one run ordinal is present. The ordinals come
+    # from the partition DIRECTORY names of the file listing, not from
+    # row values: an empty partition still holds a schema-only file,
+    # and the triangles partition is written first, so any orphaned
+    # state implies its run's directory exists here. The listing is the
+    # one the read already made — no Spark job.
     try:
         keyed = spark.read.schema(
             "ta long, tb long, tc long, batch_key string").parquet(out_dir)
@@ -364,10 +365,9 @@ def streaming_triangles(spark: SparkSession, edges_dir: str,
         if not _is_missing_path(ex):
             raise
         return spark.createDataFrame([], "a long, b long, c long")
-    keys = [r.batch_key for r in
-            keyed.select("batch_key").distinct().collect()]
+    runs = {_RUN_OF_FILE.search(f).group(1) for f in keyed.inputFiles()}
     out = keyed.select(F.col("ta").alias("a"), F.col("tb").alias("b"),
                        F.col("tc").alias("c"))
-    if len({k.split("b", 1)[0] for k in keys}) > 1:
+    if len(runs) > 1:
         out = out.distinct()
     return out

@@ -78,25 +78,24 @@ def test_triangle_count_closure_is_intersection_no_explode(spark):
 
 
 def test_triangle_closure_exchange_has_explicit_partition_count(spark):
-    """The r6 headline fix, pinned: the repartition(lo) feeding the
-    2-path join must carry an EXPLICIT partition count
-    (REPARTITION_BY_NUM, >= 64) — a bare repartition(col) plans as
-    REPARTITION_BY_COL, which AQE coalesces by shuffle BYTES and
-    serializes the compute-bound triad stage (measured 8 tasks on 32
-    cores, 1.3-1.8x wall at sf0.1)."""
+    """The repartition(lo) feeding the closure's intersection must
+    carry an EXPLICIT partition count (REPARTITION_BY_NUM, >= 64) — a
+    bare repartition(col) plans as REPARTITION_BY_COL, which AQE
+    coalesces by shuffle BYTES and serializes the compute-bound stage
+    (measured 8 tasks on 32 cores, 1.3-1.8x wall at sf0.1)."""
     import re
 
     from pyspark.sql import functions as F
 
     from mapreduce_experiment_spark.operators import graph as G
 
-    # r19: the closure's oriented/adjacency tables are eager
-    # localCheckpoints, so the FINAL query plan truncates at their
-    # ExistingRDD scans — the repartition contract is pinned on the
-    # factored pre-checkpoint subplans the operator itself builds
-    # (_oriented_repartitioned / _out_adjacency), and the physical
-    # partition count is additionally pinned on the executed result:
-    # the checkpointed stream side must RETAIN the >= 64-way layout.
+    # The closure's adjacency table is an eager localCheckpoint, so the
+    # FINAL query plan truncates at its ExistingRDD scan — the
+    # repartition contract is pinned on the factored pre-checkpoint
+    # subplans the operator itself builds (_oriented_repartitioned /
+    # _out_adjacency), and the physical partition count is
+    # additionally pinned on the executed result: the checkpointed
+    # adjacency must RETAIN the >= 64-way layout.
     ce = G.canonical_edges(
         spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long"))
     nparts = max(64, 2 * spark.sparkContext.defaultParallelism)
@@ -108,15 +107,15 @@ def test_triangle_closure_exchange_has_explicit_partition_count(spark):
     for ln in lines:
         n = int(re.search(r"hashpartitioning\(lo#\d+L?, (\d+)\)", ln).group(1))
         assert n >= 64, ln
-    adj_plan = G._out_adjacency(o_p)._jdf.queryExecution() \
-        .optimizedPlan().toString()
+    adj = G._out_adjacency(o_p)
+    adj_plan = adj._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list(hi" in adj_plan
     # The physical >= 64-way layout survives the eager localCheckpoint
     # (an RDD checkpoint is partition-preserving even though the
     # PLANNER forgets the partitioning — plans/r19/
     # localcheckpoint_partitioning_probe.txt), so the compute-bound
     # intersection stage keeps the explicit parallelism.
-    assert o_p.localCheckpoint(eager=True).rdd.getNumPartitions() == nparts
+    assert adj.localCheckpoint(eager=True).rdd.getNumPartitions() == nparts
 
 
 def test_range_join_is_equi_join(spark):

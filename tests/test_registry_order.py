@@ -199,17 +199,18 @@ _ROUND_BASE = "a93354e"  # r18 driver commit (verdict landed); bump each round
 #    whenever a later r19 edit touches their modules for real, and
 #    replaced by an explicit argument + local oracle gate then (see
 #    ngram/pagerank/spans notes appended below as they land).
-# 3. operators/graph.py — pagerank loop restructure (VERDICT item 4)
-#    and _edge_common_closers lifecycle (item 6; in-window consumers
-#    triangle_count/triangles, out-of-window triangles_faithful).
-#    Value-neutrality: pagerank keeps the identical integer
-#    fixed-point arithmetic per round (same join/agg/update
-#    expressions, only partitioning + checkpoint mechanics moved);
-#    the closure change swaps persist()+count() for eager
-#    localCheckpoint (same rows). Gated by scripts/check_oracle.py
-#    (pagerank, triangles_faithful, adjacency, degrees, symmetrize,
-#    candidate_pairs, edges_derive) at sf0.001 + sf0.01 at commit
-#    time, plus the round-end rehearsal of both halves.
+# 3. operators/graph.py — _edge_common_closers lifecycle (item 6;
+#    in-window consumers triangle_count/triangles, out-of-window
+#    triangles_faithful). Value-neutrality: the closure change swaps
+#    persist()+count() for eager localCheckpoint (same rows). A later
+#    edit to the same closure CHANGES the triangles_faithful path: the
+#    closure now checkpoints only the canonical edge set and the
+#    out-adjacency, derives the oriented edges from the adjacency by
+#    an explode, and faithful mode reuses its own checkpointed edge
+#    set instead of re-entering simple mode. Same rows by
+#    construction; gated by scripts/check_oracle.py (triangles,
+#    triangle_count, triangles_faithful) at sf0.001 + sf0.01 and by
+#    the Twitter-shaped DuckDB checksum test in tests/test_graph.py.
 # 4. operators/dedup.py — ngram_jaccard_pairs second-window removal
 #    (VERDICT item 3; out-of-window): the per-doc prefix length now
 #    joins the set SIZES from the already-checkpointed shingle-set
